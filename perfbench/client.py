@@ -1,9 +1,9 @@
 """Client side of the serving benchmark: the server process handle, the two
 protocol clients and the loops that drive a workload over real sockets.
 
-Each request is timed to its last byte; in the open loop from when it was
-due, otherwise from when it was sent. Payloads are kept for checking after
-the measured window, so no parsing competes with the load.
+Each request is timed from when it was sent to its last byte. Payloads are
+kept for checking after the measured window, so no parsing competes with
+the load.
 """
 
 from __future__ import annotations
@@ -224,7 +224,6 @@ class Server:
 @dataclass
 class Result:
     req: W.Req
-    start: float  # when due (open loop) or sent
     sent: float
     done: float = 0.0
     ok: bool = False
@@ -238,7 +237,7 @@ class Result:
 
     @property
     def latency(self) -> float:
-        return self.done - self.start
+        return self.done - self.sent
 
 
 class HttpConn:
@@ -335,48 +334,38 @@ def connect(proto: str, port: int):
 
 # --- loops ------------------------------------------------------------------
 
-def open_loop(server: Server, reqs: list[W.Req], conns: int, sampler: RssSampler
-              ) -> tuple[list[Result], list[float]]:
-    """A pool of `conns` connections per protocol takes requests in due
-    order; a request is timed from when it was due. Returns the results and,
-    for every request sent by an idle connection, how late its sender woke
-    (generator lateness)."""
-    queues = {p: [r for r in reqs if r.proto == p] for p in ("http", "flight")}
+def client_per_protocol(server: Server, reqs: list[W.Req], seconds: float,
+                        sampler: RssSampler) -> list[Result]:
+    """One closed-loop client per protocol, each on its own connection: it
+    sends its protocol's next request when the previous one has completed,
+    until `seconds` have passed or its requests run out."""
     results: list[Result] = []
-    late: list[float] = []
     lock = threading.Lock()
-    t0 = perf_counter() + 0.2
+    end = perf_counter() + seconds
 
     def run(proto: str) -> None:
         c = connect(proto, server.http_port if proto == "http" else server.flight_port)
         try:
-            while True:
-                with lock:
-                    if not queues[proto]:
-                        return
-                    r = queues[proto].pop(0)
-                due = t0 + r.due
-                now = perf_counter()
-                if now < due:
-                    time.sleep(due - now)
-                    woke = perf_counter()
-                    with lock:
-                        late.append(woke - due)
-                res = Result(r, start=due, sent=perf_counter())
+            for r in reqs:
+                if r.proto != proto:
+                    continue
+                if perf_counter() >= end:
+                    return
+                res = Result(r, sent=perf_counter())
                 c.send(r, res)
                 with lock:
                     results.append(res)
         finally:
             c.close()
 
-    threads = [threading.Thread(target=run, args=(p,)) for p in queues for _ in range(conns)]
+    threads = [threading.Thread(target=run, args=(p,)) for p in ("http", "flight")]
     for t in threads:
         t.start()
     while any(t.is_alive() for t in threads):
         sampler.wait(0.05)
     for t in threads:
         t.join()
-    return results, late
+    return results
 
 
 def closed_loop(server: Server, reqs: list[W.Req], seconds: float,
@@ -391,7 +380,7 @@ def closed_loop(server: Server, reqs: list[W.Req], seconds: float,
         for r in reqs:
             if perf_counter() >= end:
                 return
-            res = Result(r, start=perf_counter(), sent=perf_counter())
+            res = Result(r, sent=perf_counter())
             conns[r.proto].send(r, res)
             results.append(res)
 
@@ -444,7 +433,7 @@ def ingest_loop(server: Server, seed: int, table: str, seconds: float, sampler: 
                 body = "".join(json.dumps(row) + "\n" for row in tbl.to_pylist()).encode()
             with lock:
                 state["sent"] += W.BATCH_ROWS
-            res = Result(r, start=perf_counter(), sent=perf_counter())
+            res = Result(r, sent=perf_counter())
             if r.kind == "http_insert":
                 http_c.send(r, res, body=body)
             else:
@@ -472,7 +461,7 @@ def ingest_loop(server: Server, seed: int, table: str, seconds: float, sampler: 
                     acked_before = state["acked"]
                 req = W.Req(rid=f"{tag}r{i:05d}-{j}", kind="poll_count" if j == 0 else "poll_agg",
                             proto="flight", sql=sql)
-                res = Result(req, start=perf_counter(), sent=perf_counter())
+                res = Result(req, sent=perf_counter())
                 flight_r.send(req, res)
                 with lock:
                     res.extra["acked_before"], res.extra["sent_after"] = acked_before, state["sent"]

@@ -3,10 +3,13 @@ and Arrow Flight, measured from request in to bytes out on the wire.
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload dashboard --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload dashboard --seed 1 --seconds 20 --trace 0
 
-`--workload all` runs the three in turn. The server runs in its own
-process (perfbench/server.py); this process is the only client. Every
+`--workload all` runs the three in turn. BENCHMARK.json lists dashboard
+and ingest; export runs by name but is outside it, because its latencies
+spread more between runs than any bound allows (spec.json). The server
+runs in its own process (perfbench/server.py); this process is the only
+client. Every
 answer is checked (DuckDB oracle, HTTP/Flight parity, ingest prefix
 counts); a wrong answer with status 200 makes the run exit 1.
 
@@ -99,23 +102,13 @@ def merge(phases: list[Phase], name: str) -> Phase:
 
 # --- running a workload -----------------------------------------------------
 
-def dashboard_conns() -> int:
-    return min(SPEC["workloads"]["dashboard"]["connections_per_protocol"], max(1, host_cpus() // 2))
-
-
-def dashboard_reqs(seed: int, seconds: float, tag: str) -> list[W.Req]:
-    rate = SPEC["workloads"]["dashboard"]["rate_per_s"]
-    return W.dashboard(seed, rate, seconds, tag=tag)
-
-
 def run_phase(workload: str, server, seed: int, seconds: float, phase: Phase, sampler) -> None:
     from perfbench import client as C
 
     t0 = perf_counter()
     if workload == "dashboard":
-        reqs = dashboard_reqs(seed, seconds, tag=phase.name)
-        phase.results, phase.late = C.open_loop(server, reqs, dashboard_conns(), sampler)
-        t0 += 0.2  # the schedule starts 0.2 s after the call
+        reqs = W.dashboard(seed, round(W.DASHBOARD_SEQUENCE_PER_S * seconds), tag=phase.name)
+        phase.results = C.client_per_protocol(server, reqs, seconds, sampler)
     elif workload == "export":
         phase.results = C.closed_loop(server, W.export(seed, tag=phase.name), seconds, sampler)
     else:
@@ -149,7 +142,7 @@ def ingest_final(server, seed: int, table: str, wres) -> dict:
 
     c = C.FlightConn(server.flight_port)
     req = W.Req(rid="final", kind="final", proto="flight", sql=f"SELECT count(*) AS n, sum(id) AS s FROM {table}")
-    res = C.Result(req, start=perf_counter(), sent=perf_counter())
+    res = C.Result(req, sent=perf_counter())
     c.send(req, res)
     c.close()
     acked = [r for r in wres if r.ok]
@@ -173,27 +166,25 @@ def ingest_final(server, seed: int, table: str, wres) -> dict:
 
 
 def warmup(workload: str, server, seed: int, sampler) -> None:
-    """Let JIT compilation and lazy set-up finish before timing: a fixed
-    amount of the workload's own traffic, sent back to back, not checked
-    and not timed. The JVM keeps compiling for tens of seconds under these
-    mixes; fixed work puts every run at the same point of that curve. The
-    dashboard warms on its own panel statements, as a dashboard that users
-    have opened before."""
+    """Let JIT compilation and lazy set-up finish before timing: the
+    workload's own traffic for spec.json's warmup_s, sent the same way, not
+    checked and not timed. The JVM keeps compiling for tens of seconds under
+    these mixes, and a run that starts measuring early reads its first
+    seconds slower by a share that differs from run to run. The dashboard
+    warms on its own panel statements, as a dashboard that users have
+    opened before."""
     from perfbench import client as C
 
+    secs = SPEC["warmup_s"]
     if workload == "dashboard":
-        n = SPEC["workloads"]["dashboard"]["warmup_requests"]
-        rate = SPEC["workloads"]["dashboard"]["rate_per_s"]
-        reqs = W.dashboard(seed, rate, n / rate, tag="x")
-        for r in reqs:
-            r.due = 0.0
-        C.open_loop(server, reqs, dashboard_conns(), sampler)
+        reqs = W.dashboard(seed, round(W.DASHBOARD_SEQUENCE_PER_S * secs), tag="x")
+        C.client_per_protocol(server, reqs, secs, sampler)
     elif workload == "export":
-        C.closed_loop(server, W.export(seed, n_pairs=2, tag="x"), 60, sampler)
+        C.closed_loop(server, W.export(seed, tag="x"), secs, sampler)
     else:
         table = f"{W.INGEST_SCHEMA}.ingest_warmup"
         create_ingest_table(server, table)
-        C.ingest_loop(server, seed, table, 60, sampler, W.ingest_writes(n_batches=9, tag="x"), tag="x")
+        C.ingest_loop(server, seed, table, secs, sampler, W.ingest_writes(tag="x"), tag="x")
 
 
 # --- checking ---------------------------------------------------------------
@@ -327,6 +318,8 @@ def e2e_metrics(phase: Phase) -> dict[str, tuple[float, str, str]]:
         if not xs:
             continue
         t, pct = S.tail(xs)
+        ok = [x for x in xs if x != float("inf")]
+        out[f"{proto}_geomean_ms"] = (S.geomean(ok), "ms", f"n={len(ok)} answered of {len(xs)}")
         out[f"{proto}_p50_ms"] = (finite(S.median(xs)), "ms", f"n={len(xs)}")
         out[f"{proto}_tail_ms"] = (finite(t), "ms", f"p{pct:.1f}, n={len(xs)}")
     nbytes = sum(r.nbytes for r in phase.results if r.ok)
@@ -462,7 +455,7 @@ def layer_metrics(phase: Phase, spans: list[dict], tail: dict, jvm0: dict, jvm1:
     }
     all_t = [r.latency for r in phase.results if r.ok]
     all_u = [r.latency for r in untraced.results if r.ok]
-    m["trace.overhead_pct"] = 100 * (S.median(all_t) / S.median(all_u) - 1)
+    m["trace.overhead_pct"] = 100 * (S.geomean(all_t) / S.geomean(all_u) - 1)
 
     # per-request decomposition: layer self times + wire + unattributed =
     # the latency the client saw from send
@@ -605,10 +598,13 @@ def report(out: dict, seed: int, seconds: float, trace: bool) -> None:
 
 
 def result_line(out: dict, trace: bool) -> dict:
-    """The metrics BENCHMARK.json lists for this mode, each with its unit."""
+    """The metrics BENCHMARK.json lists for this mode, each with its unit.
+    Printed-only metrics (the medians and tails, result_mb_per_s,
+    rows_per_s) stay out of it."""
     listed = BENCH["per_layer" if trace else "end_to_end"]
     values = out["layers"] if trace else {k: v[0] for k, v in out["e2e"].items()}
-    if set(values) != {m["name"] for m in listed}:
+    missing = {m["name"] for m in listed} - set(values)
+    if missing or (trace and set(values) != {m["name"] for m in listed}):
         raise RuntimeError(f"metrics measured {sorted(values)} differ from BENCHMARK.json's")
     metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]} for m in listed}
     return {"correct": not out["wrong"], "attempted": out["attempted"],

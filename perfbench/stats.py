@@ -13,6 +13,16 @@ def median(values: list[float]) -> float:
     return statistics.median(values)
 
 
+def geomean(values: list[float]) -> float:
+    """Geometric mean of positive values. Over a mix of statement kinds whose
+    latencies differ tenfold, every request moves it by its own ratio, so it
+    settles with far fewer samples than the median, which only the requests
+    near the middle of the mix inform."""
+    if not values:
+        raise ValueError("geometric mean of an empty sample")
+    return statistics.geometric_mean(values)
+
+
 def tail(values: list[float]) -> tuple[float, float]:
     """(value, percentile) of the highest percentile that has at least
     TAIL_BEYOND samples beyond it.

@@ -49,6 +49,17 @@ def test_tail_counts_failed_requests_beyond():
     assert value == 10.0
 
 
+def test_geomean_moves_with_every_request_of_a_mix():
+    fast, slow = [4.0] * 10, [400.0] * 10
+    base = S.geomean(fast + slow)
+    assert base == pytest.approx(40.0)
+    # halving the fast half of the requests divides it by 2 ** 0.5
+    faster = S.geomean([2.0] * 10 + slow)
+    assert faster == pytest.approx(base / 2 ** 0.5)
+    with pytest.raises(ValueError):
+        S.geomean([])
+
+
 # --- seeded request sequences -------------------------------------------------
 
 def _fields(reqs):
@@ -56,30 +67,35 @@ def _fields(reqs):
 
 
 def test_same_seed_same_requests():
-    assert _fields(W.dashboard(7, 3.0, 12)) == _fields(W.dashboard(7, 3.0, 12))
+    assert _fields(W.dashboard(7, 36)) == _fields(W.dashboard(7, 36))
     assert _fields(W.export(7)) == _fields(W.export(7))
     assert W.ingest_batch(7, 3) == W.ingest_batch(7, 3)
     assert _fields(W.ingest_writes()) == _fields(W.ingest_writes())
 
 
 def test_other_seed_other_statements_same_traffic_shape():
-    a, b = W.dashboard(7, 3.0, 12), W.dashboard(8, 3.0, 12)
+    a, b = W.dashboard(7, 36), W.dashboard(8, 36)
     assert [r.sql for r in a] != [r.sql for r in b]
-    assert [(r.kind, r.proto, r.user, r.due) for r in a] == [(r.kind, r.proto, r.user, r.due) for r in b]
+    assert [(r.kind, r.proto, r.user) for r in a] == [(r.kind, r.proto, r.user) for r in b]
     assert [r.sql for r in W.export(7)] != [r.sql for r in W.export(8)]
     assert W.ingest_batch(7, 0) != W.ingest_batch(8, 0)
 
 
 def test_dashboard_mix_is_the_same_on_both_protocols():
-    reqs = W.dashboard(3, 3.0, 40)  # several whole blocks
+    reqs = W.dashboard(3, 120)  # several whole blocks
     http = sorted(r.sql for r in reqs if r.proto == "http" and r.sql)
     flight = sorted(r.sql for r in reqs if r.proto == "flight" and r.sql)
     assert http == flight
     assert all(r.query_id for r in reqs if r.proto == "http")
+    # each block is shuffled on its own: a closed-loop client that stops
+    # after one block's worth of requests has sent every kind of the block
+    block_http = sorted(k for k, p in W.DASHBOARD_BLOCK if p == "http")
+    first_http = [r.kind for r in reqs if r.proto == "http"][:len(block_http)]
+    assert sorted(first_http) == block_http
 
 
 def test_refetch_targets_a_recent_statement_of_the_same_user():
-    reqs = W.dashboard(3, 3.0, 40)
+    reqs = W.dashboard(3, 120)
     by_rid = {r.rid: r for r in reqs}
     for i, r in enumerate(reqs):
         if r.kind == "refetch" and r.refetch_of:
@@ -104,14 +120,14 @@ def _jsoncompact(rows):
 
 
 def test_check_accepts_the_right_answer_in_any_row_order(oracle):
-    sql = [r.sql for r in W.dashboard(1, 3.0, 12) if r.kind == "q1"][0]
+    sql = [r.sql for r in W.dashboard(1, 36) if r.kind == "q1"][0]
     want = oracle.expected("q1", sql)
     got = O.http_rows(_jsoncompact(reversed(want)), "JSONCompact")
     assert O.check("q1", want, got) == "ok"
 
 
 def test_check_rejects_a_corrupted_response(oracle):
-    sql = [r.sql for r in W.dashboard(1, 3.0, 12) if r.kind == "q1"][0]
+    sql = [r.sql for r in W.dashboard(1, 36) if r.kind == "q1"][0]
     want = oracle.expected("q1", sql)
     rows = [list(r) for r in want]
     rows[0][2] += 1.0  # one aggregate off by one

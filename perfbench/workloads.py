@@ -4,11 +4,10 @@ The server receives only what these functions generate; the same seed
 gives the same request sequence (perfbench/tests checks it). Timing and
 transport live in run.py, answers in oracle.py.
 
-- dashboard: open loop. A fixed number of arrivals (rate x seconds) at
-  uniform random times, i.e. a Poisson process conditioned on its count,
-  drawn from a fixed schedule seed so the traffic shape does not vary
-  with --seed. The seed picks one statement per kind (the dashboard's
-  panels), re-issued over the window on both protocols with the same text.
+- dashboard: closed loop, one client per protocol. The kinds' order comes
+  from a fixed schedule seed so the traffic shape does not vary with
+  --seed. The seed picks one statement per kind (the dashboard's panels),
+  re-issued over the window on both protocols with the same text.
 - export: closed loop, one client. Flight do_get alternates with HTTP
   CSV / JSONEachRow / JSONCompact over the same projection statements.
 - ingest: one closed-loop writer (do_put, do_exchange, HTTP INSERT in
@@ -37,7 +36,6 @@ class Req:
     kind: str  # statement kind or protocol operation
     proto: str  # "http" | "flight"
     user: int = 0  # 1: carries the credentials of AUTH_USER; 0: anonymous
-    due: float = 0.0  # seconds after phase start (open loop only)
     sql: str | None = None
     fmt: str | None = None  # HTTP default_format parameter
     query_id: str | None = None
@@ -125,37 +123,40 @@ DASHBOARD_BLOCK = (
     + [("info_get", "flight"), ("list_flights", "flight")]
 )
 REFETCH_WINDOW = 3  # re-fetch one of the user's last 3 HTTP statements
+# Requests generated per second of a window: more than the two closed-loop
+# clients complete together (9-12/s on a 4-core host), so neither runs out.
+DASHBOARD_SEQUENCE_PER_S = 40
 
 
-def dashboard(seed: int, rate: float, seconds: float, tag: str = "d") -> list[Req]:
-    """Open-loop schedule of round(rate * seconds) requests over `seconds`,
-    sorted by due time. Every other request of each protocol carries the
-    credentials of one user (`user` 1) and runs in that user's namespace.
+def dashboard(seed: int, n: int, tag: str = "d") -> list[Req]:
+    """The first n requests of the dashboard's sequence: whole blocks of the
+    mix, each block in its own shuffled order, so that any prefix of one
+    protocol's requests holds the kinds in the block's proportions. A
+    closed-loop client per protocol takes its protocol's requests in order.
+    Every other request of each protocol carries the credentials of one user
+    (`user` 1) and runs in that user's namespace.
 
-    The arrival pattern (which kinds, in what order, when, for which user)
-    comes from a fixed schedule seed; `seed` sets the literals,
-    keys and query ids. Runs with different seeds therefore send different
-    statements in the same traffic shape, and their spread measures the
-    system rather than which kinds happened to queue behind list_flights."""
+    The order of kinds and users comes from a fixed schedule seed; `seed`
+    sets the literals, keys and query ids. Runs with different seeds
+    therefore send different statements in the same traffic shape."""
     sched = random.Random("dashboard-schedule")
     lits = random.Random(f"dashboard-{seed}")
-    n = max(1, round(rate * seconds))
     blocks = -(-n // len(DASHBOARD_BLOCK))
     panels = {k: _dashboard_sql(k, lits) for k in DASHBOARD_SQL_KINDS}
-    sqls = {(k, b): panels[k] for b in range(blocks) for k in DASHBOARD_SQL_KINDS}
-    items = [(k, proto, b) for b in range(blocks) for k, proto in DASHBOARD_BLOCK]
-    sched.shuffle(items)
-    items = items[:n]
-    dues = sorted(sched.uniform(0, seconds) for _ in items)
+    items = []
+    for _ in range(blocks):
+        block = list(DASHBOARD_BLOCK)
+        sched.shuffle(block)
+        items += block
     reqs: list[Req] = []
     next_user = {"http": 0, "flight": 0}
     history: dict[tuple[str, int], list[Req]] = {}
-    for i, ((kind, proto, b), due) in enumerate(zip(items, dues)):
+    for i, (kind, proto) in enumerate(items[:n]):
         user = next_user[proto]
         next_user[proto] = 1 - user
-        r = Req(rid=f"{tag}{i:05d}", kind=kind, proto=proto, user=user, due=due)
-        if (kind, b) in sqls:
-            r.sql = sqls[kind, b]
+        r = Req(rid=f"{tag}{i:05d}", kind=kind, proto=proto, user=user)
+        if kind in panels:
+            r.sql = panels[kind]
             if proto == "http":
                 r.fmt = "JSONCompact"
                 r.query_id = f"{tag}{seed}-{i}"
@@ -176,6 +177,7 @@ def dashboard(seed: int, rate: float, seconds: float, tag: str = "d") -> list[Re
 # --- export ----------------------------------------------------------------
 
 EXPORT_FORMATS = ("CSV", "JSONEachRow", "JSONCompact")
+EXPORT_PAIRS = 600  # more than one client completes in a window
 
 
 def _export_sql(j: int, rng: random.Random) -> str:
@@ -192,13 +194,13 @@ def _export_sql(j: int, rng: random.Random) -> str:
     )
 
 
-def export(seed: int, n_pairs: int = 600, tag: str = "e") -> list[Req]:
+def export(seed: int, tag: str = "e") -> list[Req]:
     """Closed-loop sequence: statement j over Flight, then the same
     statement over HTTP in format j mod 3; every HTTP request carries a
     distinct query_id."""
     rng = random.Random(f"export-{seed}")
     reqs: list[Req] = []
-    for j in range(n_pairs):
+    for j in range(EXPORT_PAIRS):
         sql = _export_sql(j, rng)
         reqs.append(Req(rid=f"{tag}{2 * j:05d}", kind="export", proto="flight", sql=sql))
         reqs.append(Req(
@@ -212,6 +214,7 @@ def export(seed: int, n_pairs: int = 600, tag: str = "e") -> list[Req]:
 
 INGEST_OPS = ("do_put", "do_exchange", "http_insert")
 INGEST_POLL_S = 0.5
+INGEST_BATCHES = 2000  # more than the writer sends in a window
 
 
 def ingest_batch(seed: int, b: int) -> dict[str, list]:
@@ -225,11 +228,11 @@ def ingest_batch(seed: int, b: int) -> dict[str, list]:
     }
 
 
-def ingest_writes(n_batches: int = 2000, tag: str = "w") -> list[Req]:
+def ingest_writes(tag: str = "w") -> list[Req]:
     return [
         Req(rid=f"{tag}{b:05d}", kind=INGEST_OPS[b % 3],
             proto="http" if INGEST_OPS[b % 3] == "http_insert" else "flight", batch=b)
-        for b in range(n_batches)
+        for b in range(INGEST_BATCHES)
     ]
 
 
