@@ -24,6 +24,7 @@ spark.sql():
 - SELECT * EXCLUDE (cols)  → * EXCEPT (cols)  (Spark's spelling)
 - leading FROM (`FROM t` / `FROM t WHERE ...`) → SELECT * FROM ...
 - SUMMARIZE t             → per-column stats via DataFrame.summary()
+- SHOW ALL TABLES         → all_tables(): every database's tables
 - == is already valid Spark SQL (no rewrite needed)
 - GROUP BY ALL / ORDER BY ALL / * EXCEPT are native in Spark ≥3.4 —
   accepted as-is (pinned in tests/test_dialect.py)
@@ -40,8 +41,10 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # lexer
@@ -442,6 +445,39 @@ def split_statements(script: str) -> list[str]:
     return stmts
 
 
+def quote_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def databases(spark: SparkSession) -> list[str]:
+    """Database names, from one `SHOW DATABASES` (driver-side metadata)."""
+    return [r[0] for r in spark.sql("SHOW DATABASES").collect()]
+
+
+def all_tables(spark: SparkSession) -> DataFrame:
+    """Tables across every database as (database, name, table_type): the
+    answer to DuckDB's `SHOW ALL TABLES`.
+
+    Built from SQL commands, one `SHOW TABLE EXTENDED ... LIKE '*'` per
+    database, whose results Spark holds as local relations: the frame
+    has a known size estimate and costs no catalog round trip per table
+    (the PySpark Catalog API makes several per table). Temp views are
+    session-global and every database's listing repeats them, so they
+    are taken from the first listing only and listed once under `temp`.
+    table_type is the lower-cased `Type:` line of `information`."""
+    listings = [
+        spark.sql(f"SHOW TABLE EXTENDED IN {quote_ident(db)} LIKE '*'")
+        for db in databases(spark)
+    ]
+    temp = F.col("isTemporary")
+    parts = [t.where(~temp) for t in listings] + [listings[0].where(temp)]
+    return reduce(DataFrame.unionAll, parts).select(
+        F.when(temp, F.lit("temp")).otherwise(F.col("namespace")).alias("database"),
+        F.col("tableName").alias("name"),
+        F.lower(F.regexp_extract("information", r"(?m)^Type: (\w+)", 1)).alias("table_type"),
+    )
+
+
 def run_script(spark: SparkSession, script: str) -> DataFrame | None:
     """Execute a multi-statement script sequentially, returning the last
     statement's result — the reference's DuckDB `execute` behavior for
@@ -461,31 +497,11 @@ def run_script(spark: SparkSession, script: str) -> DataFrame | None:
         words = [toks[i].text.upper() for i in sig[:3]]
         if words == ["SHOW", "ALL", "TABLES"] and len(sig) == 3:
             # DuckDB `SHOW ALL TABLES` (the reference's canned
-            # list_schemas flight ticket, main.py:515-519): tables across
-            # every database. Spark SHOW TABLES is per-database, so this
-            # is a catalog-API union — driver-side metadata, no job.
-            # Exactly three tokens: a FROM/LIKE suffix is NOT this
-            # statement and falls through to spark.sql for a loud error
-            # rather than silently ignoring the qualifier. Temp views are
-            # session-global (listTables repeats them per database) —
-            # list them once under their own pseudo-database.
-            rows = [
-                (db.name, t.name, t.tableType.lower() if t.tableType else "table")
-                for db in spark.catalog.listDatabases()
-                for t in spark.catalog.listTables(db.name)
-                if t.tableType != "TEMPORARY"
-            ]
-            rows += sorted(
-                {
-                    ("temp", t.name, "view")
-                    for db in spark.catalog.listDatabases()
-                    for t in spark.catalog.listTables(db.name)
-                    if t.tableType == "TEMPORARY"
-                }
-            )
-            result = spark.createDataFrame(
-                rows or [], "database STRING, name STRING, table_type STRING"
-            )
+            # list_schemas flight ticket, main.py:515-519). Exactly three
+            # tokens: a FROM/LIKE suffix is NOT this statement and falls
+            # through to spark.sql for a loud error rather than silently
+            # ignoring the qualifier.
+            result = all_tables(spark)
         elif sig and toks[sig[0]].is_word("SUMMARIZE"):
             # DuckDB SUMMARIZE <table-or-query>: per-column summary stats.
             # Spark-native form: DataFrame.summary() over the target —

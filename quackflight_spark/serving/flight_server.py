@@ -4,15 +4,17 @@ The reference exposes DuckDB over pyarrow.flight (DuckDBFlightServer,
 main.py:473-1105). This is the same protocol surface backed by the Spark
 engine, with the §7-listed reference bugs fixed:
 
-- do_get: ticket SQL → spark.sql → Arrow RecordBatch stream, chunks ≤1024
-  rows (reference main.py:781-788). Large results stream via
-  toLocalIterator-backed batching instead of full materialization
-  (reference materializes everything — main.py:781).
-- get_flight_info: result schema from Catalyst ANALYSIS ONLY — the
-  reference executes the whole query to learn its schema (main.py:820-828);
-  spark.sql(q).schema costs nothing. This is the §3.3 design win.
-- list_flights: catalog listing from spark.catalog with the
-  `airport-list-flights-filter-catalog/-schema` headers honored
+- do_get: ticket SQL → run_script (the dialect front door HTTP shares) →
+  Arrow RecordBatch stream, chunks ≤1024 rows (reference main.py:781-788).
+  A result whose Catalyst size estimate fits spark.driver.maxResultSize
+  is collected as one Arrow table, as the reference does (main.py:781);
+  it streams partition by partition through toLocalIterator when the
+  estimate exceeds maxResultSize or is unknown.
+- get_flight_info: result schema from run_script's frame — Catalyst
+  ANALYSIS ONLY for queries; the reference executes the whole query to
+  learn its schema (main.py:820-828). This is the §3.3 design win.
+- list_flights: catalog listing from dialect.all_tables (SQL catalog
+  commands) with the `airport-list-flights-filter-schema` header honored
   (reference main.py:879-882); always yields real FlightInfo objects
   (the reference yields raw dicts for canned flights — bug, main.py:972-982).
 - do_put / do_exchange: Arrow batch ingest appended to the target table;
@@ -42,7 +44,7 @@ except ImportError:  # pragma: no cover
 
 from pyspark.sql import SparkSession
 
-from quackflight_spark.plans.dialect import run_script
+from quackflight_spark.plans.dialect import all_tables, databases, quote_ident, run_script
 
 BATCH_ROWS = 1024  # reference main.py:782
 
@@ -61,15 +63,34 @@ def parse_ticket(raw: bytes) -> str:
     return raw.decode()
 
 
-def _df_to_arrow(df) -> pa.Table:
-    return df.toArrow()
-
-
 def _spark_schema_to_arrow(df) -> pa.Schema:
     """Arrow schema from Catalyst analysis only — no job runs."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(df.schema)
+
+
+_UNKNOWN_SIZE = 2**63 - 1  # Catalyst's estimate when it has none (Long.MaxValue)
+
+
+def _within_result_limit(df, max_result_bytes: int) -> bool:
+    """Catalyst's size estimate of the result (optimizer only, no job) is
+    known and within spark.driver.maxResultSize (0 = unlimited)."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return size < _UNKNOWN_SIZE and (max_result_bytes == 0 or size <= max_result_bytes)
+
+
+def _row_batches(df, schema: pa.Schema):
+    """≤BATCH_ROWS RecordBatches pulled one partition at a time."""
+    names = df.columns
+    buf: list = []
+    for row in df.toLocalIterator(prefetchPartitions=True):
+        buf.append(dict(zip(names, row)))
+        if len(buf) >= BATCH_ROWS:
+            yield pa.RecordBatch.from_pylist(buf, schema=schema)
+            buf = []
+    if buf:
+        yield pa.RecordBatch.from_pylist(buf, schema=schema)
 
 
 if flight is not None:
@@ -109,6 +130,11 @@ if flight is not None:
             from quackflight_spark.serving.namespaces import SessionManager
 
             self._sessions = SessionManager(spark)
+            # Spark's own default is 1g; the setting belongs to the shared
+            # SparkContext, so every namespace session has the same limit.
+            self._max_result_bytes = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+                "spark.driver.maxResultSize", "1g"
+            )
 
         def _session_for(self, context) -> SparkSession:
             """Per-request session from the auth header (never mutates
@@ -128,44 +154,37 @@ if flight is not None:
 
         # --- data path -----------------------------------------------------
         def do_get(self, context, ticket):
-            """Incremental streaming: toLocalIterator pulls one partition
-            at a time from the executors, re-batched to ≤1024 rows — the
-            server never materializes the whole result (the reference
-            does: fetch_arrow_table() at main.py:781; fixed per SURVEY
-            §3.2 'improvement over the reference')."""
+            """Ticket SQL → ≤1024-row RecordBatches. A result whose size
+            estimate fits maxResultSize is collected in one toArrow() and
+            sliced zero-copy, as the reference's fetch_arrow_table()
+            (main.py:781-788); a result whose estimate exceeds
+            maxResultSize, or is unknown (RDD-backed relations), streams
+            one partition at a time through toLocalIterator, so the server
+            never holds it whole. Spark's own maxResultSize check stays
+            the backstop when an estimate is too low."""
             query = parse_ticket(ticket.ticket)
-            spark = self._session_for(context)
-            df = run_script(spark, query)
+            df = run_script(self._session_for(context), query)
             if df is None:
-                schema = pa.schema([])
-                return flight.RecordBatchStream(pa.table({}, schema=schema))
+                return flight.RecordBatchStream(pa.table({}, schema=pa.schema([])))
             schema = _spark_schema_to_arrow(df)
-            names = df.columns
-
-            def batches():
-                buf: list = []
-                for row in df.toLocalIterator(prefetchPartitions=True):
-                    buf.append(row)
-                    if len(buf) >= BATCH_ROWS:
-                        yield pa.RecordBatch.from_pylist(
-                            [dict(zip(names, r)) for r in buf], schema=schema
-                        )
-                        buf = []
-                if buf:
-                    yield pa.RecordBatch.from_pylist(
-                        [dict(zip(names, r)) for r in buf], schema=schema
-                    )
-
-            return flight.GeneratorStream(schema, batches())
+            if _within_result_limit(df, self._max_result_bytes):
+                table = df.toArrow().cast(schema)
+                batches = iter(table.to_batches(max_chunksize=BATCH_ROWS))
+            else:
+                batches = _row_batches(df, schema)
+            return flight.GeneratorStream(schema, batches)
 
         def get_flight_info(self, context, descriptor):
+            """Result schema through the same front door as do_get; a
+            script whose last statement returns nothing has an empty
+            schema."""
             if descriptor.descriptor_type == flight.DescriptorType.CMD:
                 query = parse_ticket(descriptor.command)
             else:
                 path = descriptor.path[0].decode()
                 query = f"SELECT * FROM {path}"
-            df = self._session_for(context).sql(query)  # analysis only — lazy
-            schema = _spark_schema_to_arrow(df)
+            df = run_script(self._session_for(context), query)
+            schema = pa.schema([]) if df is None else _spark_schema_to_arrow(df)
             ticket = flight.Ticket(json.dumps({"query": query}).encode())
             endpoint = flight.FlightEndpoint(ticket, [self.location])
             return flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
@@ -199,21 +218,17 @@ if flight is not None:
             want_schema = headers.get("airport-list-flights-filter-schema")
             for command, sql in self.CANNED_FLIGHTS:
                 yield self._canned_flight_info(command, sql)
-            catalog = self.spark.catalog
-            dbs = [d.name for d in catalog.listDatabases()]
-            if want_schema:
-                dbs = [d for d in dbs if d == want_schema]
-            for db in dbs:
-                for t in catalog.listTables(db):
-                    full = f"{t.namespace[0]}.{t.name}" if t.namespace else t.name
-                    df = self.spark.table(full)
-                    schema = _spark_schema_to_arrow(df)
-                    ticket = flight.Ticket(
-                        json.dumps({"query": f"SELECT * FROM {full}"}).encode()
-                    )
-                    descriptor = flight.FlightDescriptor.for_path(full.encode())
-                    endpoint = flight.FlightEndpoint(ticket, [self.location])
-                    yield flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
+            for db, name, _ in all_tables(self.spark).collect():
+                if want_schema and db != want_schema:
+                    continue
+                full = name if db == "temp" else f"{db}.{name}"
+                schema = _spark_schema_to_arrow(self.spark.table(full))
+                ticket = flight.Ticket(
+                    json.dumps({"query": f"SELECT * FROM {full}"}).encode()
+                )
+                descriptor = flight.FlightDescriptor.for_path(full.encode())
+                endpoint = flight.FlightEndpoint(ticket, [self.location])
+                yield flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
 
         # --- ingest ----------------------------------------------------------
         def _append_table(self, table_name: str, arrow_table: pa.Table) -> int:
@@ -243,6 +258,10 @@ if flight is not None:
             writer.write_table(pa.table({"rows_inserted": [total]}, schema=ack_schema))
 
         # --- DDL actions -----------------------------------------------------
+        def _db_comment(self, db: str) -> str | None:
+            rows = self.spark.sql(f"DESCRIBE NAMESPACE {quote_ident(db)}").collect()
+            return next((r[1] for r in rows if r[0] == "Comment"), None)
+
         def do_action(self, context, action):
             body = action.body.to_pybytes() if action.body else b"{}"
             if action.type == "create_schema":
@@ -278,13 +297,13 @@ if flight is not None:
                 catalog_name = payload.get("catalog_name", "main")
                 schemas = [
                     {
-                        "schema": d.name,
-                        "description": d.description or "Spark Schema",
+                        "schema": db,
+                        "description": self._db_comment(db) or "Spark Schema",
                         "tags": {},
                         "type": "table",
                         "contents": {"url": None, "sha256": None, "serialized": None},
                     }
-                    for d in self.spark.catalog.listDatabases()
+                    for db in databases(self.spark)
                 ]
                 catalog_root = {
                     "contents": {"url": None, "sha256": None, "serialized": None},

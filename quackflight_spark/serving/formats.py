@@ -17,9 +17,10 @@ deviations from reference bugs (SURVEY §7 "not to replicate"):
   reference leaks raw DuckDB names).
 
 Serialization is a protocol concern: results at this point are final
-(post-LIMIT / post-agg); the engine never collects unbounded data here —
-callers stream with toLocalIterator/toArrow for large results (see
-flight_server.py).
+(post-LIMIT / post-agg) and collected whole, bounded by Spark's
+spark.driver.maxResultSize check. Flight's do_get collects with one
+toArrow() too, and streams through toLocalIterator only when the result's
+size estimate exceeds maxResultSize or is unknown (see flight_server.py).
 """
 
 from __future__ import annotations

@@ -8,8 +8,9 @@ Routes and semantics mirror the reference's Flask app (main.py:262-347):
 - GET `/ping`    health probe → "Ok."                     (main.py:345-347)
 
 Lifecycle per request (reference §3.1 trace → our pipeline):
-  params → query_id cache probe → sanitize_query (FORMAT strip) →
-  database param → USE namespace → dialect transpile → spark.sql
+  params → namespace (auth user or database param) → (namespace,
+  query_id) cache probe → sanitize_query (FORMAT strip) → namespace
+  session → dialect.run_script, the statement front door Flight shares
   (multi-statement scripts run sequentially, last result returned) →
   format serializer → cache store → HTTP 200 / 400-with-message.
 
@@ -26,7 +27,14 @@ import time
 
 from pyspark.sql import SparkSession
 
-from quackflight_spark.plans.dialect import sanitize_query, split_statements, transpile
+# split_statements and transpile are unused here, but stay bound in this
+# module: perfbench/tracer.py wraps them by name on http_app.
+from quackflight_spark.plans.dialect import (  # noqa: F401
+    run_script,
+    sanitize_query,
+    split_statements,
+    transpile,
+)
 from quackflight_spark.serving.cache import QueryCache
 from quackflight_spark.serving.formats import format_result
 from quackflight_spark.serving.namespaces import SessionManager, user_namespace
@@ -65,17 +73,7 @@ def execute_query(
         n = insert_ndjson(spark, m.group(1), body)
         return (f"{n}\n".encode(), "text/plain")
 
-    result = None
-    from quackflight_spark.serving.namespaces import maybe_handle_attach
-
-    for stmt in split_statements(query):
-        # SQL-statement ATTACH/DETACH (the reference forwards these to
-        # DuckDB verbatim, main.py:284): bridge as a snapshot namespace /
-        # drop it — same semantics as the path-valued `database` param.
-        if maybe_handle_attach(spark, stmt):
-            result = None
-            continue
-        result = spark.sql(transpile(stmt))
+    result = run_script(spark, query)
     if result is None:
         return (b"", "text/plain")
     return format_result(result, fmt, elapsed=time.time() - t0)
@@ -104,16 +102,19 @@ def create_app(spark: SparkSession, cache: QueryCache | None = None):
         database = request.args.get("database")
         query_id = request.args.get("query_id")
 
-        if query_id and not query:
-            hit = cache.get(query_id)  # cached-result probe (main.py:276-278)
-            if hit:
-                payload, ctype = hit
-                return Response(payload, 200, content_type=ctype)
-
         user = request.authorization.username if request.authorization else None
         pwd = request.authorization.password if request.authorization else None
         if user and not database:
             database = user_namespace(user, pwd)
+        # results are cached per namespace: one user's query_id never
+        # serves another user's bytes
+        cache_key = (database or "default", query_id)
+
+        if query_id and not query:
+            hit = cache.get(cache_key)  # cached-result probe (main.py:276-278)
+            if hit:
+                payload, ctype = hit
+                return Response(payload, 200, content_type=ctype)
 
         if not query:
             return Response(b"Ok.", 200, content_type="text/plain")
@@ -122,7 +123,7 @@ def create_app(spark: SparkSession, cache: QueryCache | None = None):
         except Exception as ex:  # error → 400 with message (main.py:289-303)
             return Response(str(ex).encode(), 400, content_type="text/plain")
         if query_id:
-            cache.put(query_id, payload, ctype)
+            cache.put(cache_key, payload, ctype)
         return Response(payload, 200, content_type=ctype)
 
     @app.route("/", methods=["GET", "HEAD"])

@@ -212,6 +212,22 @@ def test_http_query_id_cache(client):
     assert r2.status_code == 200 and r2.data == r1.data
 
 
+def test_http_query_id_cache_scoped_to_namespace(client, spark):
+    """A cached result is served only within the namespace that stored it:
+    user A's query_id never returns A's bytes to user B or to an anonymous
+    caller (the reference keys its cache on the bare query_id)."""
+    alice, bob = ("alice", "pw-a"), ("bob", "pw-b")
+    try:
+        r1 = client.get("/?query=SELECT 'alice-secret' AS s&query_id=qid_a", auth=alice)
+        assert r1.status_code == 200 and b"alice-secret" in r1.data
+        assert client.get("/?query_id=qid_a", auth=alice).data == r1.data
+        for other in (client.get("/?query_id=qid_a", auth=bob), client.get("/?query_id=qid_a")):
+            assert other.status_code == 200 and other.data == b"Ok."
+    finally:
+        for user, pwd in (alice, bob):
+            spark.sql(f"DROP DATABASE IF EXISTS {user_namespace(user, pwd)} CASCADE")
+
+
 def test_http_get_play_console(client):
     """GET /play serves the browser query console (reference serves
     quack-ui's index.html, main.py:340-342)."""
@@ -293,6 +309,136 @@ def test_flight_batches_chunked(flight_client):
     sizes = [chunk.data.num_rows for chunk in reader]
     assert sum(sizes) == 6000
     assert max(sizes) <= 1024
+
+
+def _flight_batches(flight_client, sql: str):
+    import pyarrow as pa
+    import pyarrow.flight as fl
+
+    reader = flight_client.do_get(fl.Ticket(sql.encode()))
+    batches = [chunk.data for chunk in reader]
+    return reader.schema, batches, pa.Table.from_batches(batches, reader.schema)
+
+
+@pytest.mark.parametrize("arrow_path", [True, False])
+def test_flight_do_get_size_gate(flight_client, spark, arrow_path):
+    """Both sides of do_get's size gate return the same rows in ≤1024-row
+    batches under the schema get_flight_info advertises: a result with a
+    known, small size estimate is one toArrow() collection; a relation
+    over an RDD has no estimate and streams through toLocalIterator."""
+    import pyarrow.flight as fl
+
+    from quackflight_spark.serving.flight_server import _within_result_limit
+
+    if arrow_path:
+        sql = "SELECT l_orderkey, l_returnflag FROM lineitem"
+    else:
+        rdd = spark.sparkContext.parallelize([(i, f"c{i}") for i in range(3000)], 4)
+        spark.createDataFrame(rdd, "l_orderkey BIGINT, l_returnflag STRING") \
+            .createOrReplaceTempView("_rdd_rows")
+        sql = "SELECT l_orderkey, l_returnflag FROM _rdd_rows"
+    try:
+        df = spark.sql(sql)
+        assert _within_result_limit(df, 1 << 30) is arrow_path
+        info = flight_client.get_flight_info(fl.FlightDescriptor.for_command(sql.encode()))
+        schema, batches, table = _flight_batches(flight_client, sql)
+        assert schema.equals(info.schema)
+        assert max(b.num_rows for b in batches) <= 1024 and len(batches) > 1
+        want = sorted((r["l_orderkey"], r["l_returnflag"]) for r in df.collect())
+        got = sorted(zip(table["l_orderkey"].to_pylist(), table["l_returnflag"].to_pylist()))
+        assert got == want
+    finally:
+        spark.catalog.dropTempView("_rdd_rows")
+
+
+def test_result_limit_follows_max_result_size(spark):
+    """The gate reads spark.driver.maxResultSize: a known estimate above
+    it streams, 0 means unlimited, and an unknown estimate always streams."""
+    from quackflight_spark.serving.flight_server import _within_result_limit
+
+    small = spark.sql("SELECT n_nationkey FROM nation")
+    assert _within_result_limit(small, 1 << 30) and _within_result_limit(small, 0)
+    assert not _within_result_limit(small, 1)
+    rdd = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "a INT")
+    assert not _within_result_limit(rdd, 0)
+
+
+PARITY_STATEMENTS = [
+    "SHOW ALL TABLES",
+    "SUMMARIZE nation",
+    "SELECT count() AS c FROM nation",
+    "SELECT n_nationkey::DOUBLE AS k FROM nation WHERE n_nationkey < 3",
+    "SELECT n_regionkey, n_name FROM nation "
+    "QUALIFY row_number() OVER (PARTITION BY n_regionkey ORDER BY n_name) = 1",
+    "SELECT n_name FROM nation WHERE n_nationkey = 7 FORMAT JSONEachRow",
+]
+
+
+@pytest.mark.parametrize("sql", PARITY_STATEMENTS)
+def test_http_flight_parity(client, flight_client, sql):
+    """HTTP and Flight share one statement front door (run_script), so
+    DuckDB-only statements answer the same on both protocols."""
+    r = client.get("/", query_string={"query": sql, "default_format": "JSONCompact"})
+    assert r.status_code == 200, r.data
+    if r.content_type == "application/x-ndjson":  # the statement's FORMAT clause
+        http_rows = [list(json.loads(ln).values()) for ln in r.data.decode().splitlines()]
+    else:
+        http_rows = json.loads(r.data)["data"]
+    _, _, table = _flight_batches(flight_client, sql)
+    flight_rows = [list(row.values()) for row in table.to_pylist()]
+    assert http_rows and sorted(map(repr, http_rows)) == sorted(map(repr, flight_rows))
+
+
+@pytest.mark.parametrize("sql, columns", [
+    ("SELECT count() AS c FROM nation", ["c"]),
+    ("SELECT n_name FROM nation FORMAT JSONEachRow", ["n_name"]),
+    ("SHOW ALL TABLES", ["database", "name", "table_type"]),
+])
+def test_flight_get_info_through_dialect(flight_client, sql, columns):
+    """get_flight_info goes through the dialect like do_get: its schema is
+    the one the ticket's stream carries."""
+    import pyarrow.flight as fl
+
+    info = flight_client.get_flight_info(fl.FlightDescriptor.for_command(sql.encode()))
+    assert info.schema.names == columns
+    table = flight_client.do_get(info.endpoints[0].ticket).read_all()
+    assert table.schema.equals(info.schema)
+
+
+def test_flight_get_info_no_result_has_empty_schema(flight_client, spark, tmp_path):
+    """A script whose last statement returns no frame (ATTACH) gets an
+    empty advertised schema instead of a parse error."""
+    import pyarrow.flight as fl
+
+    from quackflight_spark.serving.namespaces import detach_namespace
+
+    db = str(tmp_path / "gfi.duckdb")
+    _make_duckdb_file(db)
+    try:
+        desc = fl.FlightDescriptor.for_command(f"ATTACH '{db}' AS gfi".encode())
+        assert len(flight_client.get_flight_info(desc).schema) == 0
+    finally:
+        detach_namespace(spark, "gfi")
+
+
+def test_all_tables_types_and_known_estimate(spark):
+    """SHOW ALL TABLES takes table_type from each table's `Type:` line, and
+    its frame has a size estimate (it is built over SQL command results,
+    not Python rows), so Flight collects it as Arrow."""
+    from quackflight_spark.plans.dialect import all_tables
+    from quackflight_spark.serving.flight_server import _within_result_limit
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS sat_db")
+    spark.sql("CREATE TABLE IF NOT EXISTS sat_db.m (a INT) USING parquet")
+    spark.sql("CREATE OR REPLACE VIEW sat_db.v AS SELECT 1 AS a")
+    try:
+        df = all_tables(spark)
+        rows = {(r["database"], r["name"], r["table_type"]) for r in df.collect()}
+        assert {("sat_db", "m", "managed"), ("sat_db", "v", "view"),
+                ("temp", "nation", "view")} <= rows
+        assert _within_result_limit(df, 0)
+    finally:
+        spark.sql("DROP DATABASE sat_db CASCADE")
 
 
 def test_flight_list_actions_create_schema(flight_client, spark):
