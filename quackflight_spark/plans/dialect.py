@@ -449,25 +449,21 @@ def quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def databases(spark: SparkSession) -> list[str]:
-    """Database names, from one `SHOW DATABASES` (driver-side metadata)."""
-    return [r[0] for r in spark.sql("SHOW DATABASES").collect()]
+def table_listing(spark: SparkSession) -> DataFrame:
+    """Tables across every database as (database, name, table_type,
+    temporary); `all_tables` without the last column.
 
-
-def all_tables(spark: SparkSession) -> DataFrame:
-    """Tables across every database as (database, name, table_type): the
-    answer to DuckDB's `SHOW ALL TABLES`.
-
-    Built from SQL commands, one `SHOW TABLE EXTENDED ... LIKE '*'` per
-    database, whose results Spark holds as local relations: the frame
-    has a known size estimate and costs no catalog round trip per table
-    (the PySpark Catalog API makes several per table). Temp views are
-    session-global and every database's listing repeats them, so they
-    are taken from the first listing only and listed once under `temp`.
-    table_type is the lower-cased `Type:` line of `information`."""
+    Built from SQL commands, `SHOW DATABASES` and one `SHOW TABLE EXTENDED
+    ... LIKE '*'` per database, whose results Spark holds as local
+    relations: the frame has a known size estimate and costs no catalog
+    round trip per table (the PySpark Catalog API makes several per
+    table). Temp views are session-global and every database's listing
+    repeats them, so they are taken from the first listing only and listed
+    once under `temp`. table_type is the lower-cased `Type:` line of
+    `information`."""
     listings = [
-        spark.sql(f"SHOW TABLE EXTENDED IN {quote_ident(db)} LIKE '*'")
-        for db in databases(spark)
+        spark.sql(f"SHOW TABLE EXTENDED IN {quote_ident(r[0])} LIKE '*'")
+        for r in spark.sql("SHOW DATABASES").collect()
     ]
     temp = F.col("isTemporary")
     parts = [t.where(~temp) for t in listings] + [listings[0].where(temp)]
@@ -475,7 +471,14 @@ def all_tables(spark: SparkSession) -> DataFrame:
         F.when(temp, F.lit("temp")).otherwise(F.col("namespace")).alias("database"),
         F.col("tableName").alias("name"),
         F.lower(F.regexp_extract("information", r"(?m)^Type: (\w+)", 1)).alias("table_type"),
+        temp.alias("temporary"),
     )
+
+
+def all_tables(spark: SparkSession) -> DataFrame:
+    """(database, name, table_type) of every table: the answer to DuckDB's
+    `SHOW ALL TABLES`."""
+    return table_listing(spark).drop("temporary")
 
 
 def run_script(spark: SparkSession, script: str) -> DataFrame | None:

@@ -9,11 +9,12 @@ engine, with the §7-listed reference bugs fixed:
   A result whose Catalyst size estimate fits spark.driver.maxResultSize
   is collected as one Arrow table, as the reference does (main.py:781);
   it streams partition by partition through toLocalIterator when the
-  estimate exceeds maxResultSize or is unknown.
+  estimate exceeds maxResultSize or is unknown, or when the collection
+  turns out larger than the estimate and Spark aborts it.
 - get_flight_info: result schema from run_script's frame — Catalyst
   ANALYSIS ONLY for queries; the reference executes the whole query to
   learn its schema (main.py:820-828). This is the §3.3 design win.
-- list_flights: catalog listing from dialect.all_tables (SQL catalog
+- list_flights: catalog listing from dialect.table_listing (SQL catalog
   commands) with the `airport-list-flights-filter-schema` header honored
   (reference main.py:879-882); always yields real FlightInfo objects
   (the reference yields raw dicts for canned flights — bug, main.py:972-982).
@@ -44,7 +45,7 @@ except ImportError:  # pragma: no cover
 
 from pyspark.sql import SparkSession
 
-from quackflight_spark.plans.dialect import all_tables, databases, quote_ident, run_script
+from quackflight_spark.plans.dialect import run_script, split_statements, table_listing
 
 BATCH_ROWS = 1024  # reference main.py:782
 
@@ -78,6 +79,20 @@ def _within_result_limit(df, max_result_bytes: int) -> bool:
     known and within spark.driver.maxResultSize (0 = unlimited)."""
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return size < _UNKNOWN_SIZE and (max_result_bytes == 0 or size <= max_result_bytes)
+
+
+def _arrow_batches(df, schema: pa.Schema):
+    """≤BATCH_ROWS RecordBatches sliced zero-copy from one toArrow(), or
+    None when Spark aborts the collection at spark.driver.maxResultSize:
+    a file scan's estimate is its compressed on-disk size, so a result
+    estimated within the limit can still exceed it as Arrow."""
+    try:
+        table = df.toArrow()
+    except Exception as e:  # py4j wraps the job's SparkException
+        if "spark.driver.maxResultSize" not in str(e):
+            raise
+        return None
+    return iter(table.cast(schema).to_batches(max_chunksize=BATCH_ROWS))
 
 
 def _row_batches(df, schema: pa.Schema):
@@ -157,27 +172,32 @@ if flight is not None:
             """Ticket SQL → ≤1024-row RecordBatches. A result whose size
             estimate fits maxResultSize is collected in one toArrow() and
             sliced zero-copy, as the reference's fetch_arrow_table()
-            (main.py:781-788); a result whose estimate exceeds
-            maxResultSize, or is unknown (RDD-backed relations), streams
-            one partition at a time through toLocalIterator, so the server
-            never holds it whole. Spark's own maxResultSize check stays
-            the backstop when an estimate is too low."""
+            (main.py:781-788); the server then holds it whole, which
+            Spark's maxResultSize check bounds. It streams one partition
+            at a time through toLocalIterator when the estimate exceeds
+            maxResultSize or is unknown (RDD-backed relations), and when
+            Spark aborts the collection because the estimate was too low."""
             query = parse_ticket(ticket.ticket)
             df = run_script(self._session_for(context), query)
             if df is None:
                 return flight.RecordBatchStream(pa.table({}, schema=pa.schema([])))
             schema = _spark_schema_to_arrow(df)
+            batches = None
             if _within_result_limit(df, self._max_result_bytes):
-                table = df.toArrow().cast(schema)
-                batches = iter(table.to_batches(max_chunksize=BATCH_ROWS))
-            else:
+                batches = _arrow_batches(df, schema)
+            if batches is None:
                 batches = _row_batches(df, schema)
             return flight.GeneratorStream(schema, batches)
 
         def get_flight_info(self, context, descriptor):
             """Result schema through the same front door as do_get; a
             script whose last statement returns nothing has an empty
-            schema."""
+            schema. The whole script runs here, so its earlier statements
+            take effect now and the ticket holds the last statement only:
+            do_get does not run them twice ('CREATE TABLE t AS ...;
+            SELECT * FROM t' creates t once). A last statement that is
+            itself a command runs here and again in do_get, as the
+            reference does (main.py:820-828)."""
             if descriptor.descriptor_type == flight.DescriptorType.CMD:
                 query = parse_ticket(descriptor.command)
             else:
@@ -185,6 +205,9 @@ if flight is not None:
                 query = f"SELECT * FROM {path}"
             df = run_script(self._session_for(context), query)
             schema = pa.schema([]) if df is None else _spark_schema_to_arrow(df)
+            stmts = split_statements(query)
+            if len(stmts) > 1:
+                query = stmts[-1]
             ticket = flight.Ticket(json.dumps({"query": query}).encode())
             endpoint = flight.FlightEndpoint(ticket, [self.location])
             return flight.FlightInfo(schema, descriptor, [endpoint], -1, -1)
@@ -201,8 +224,7 @@ if flight is not None:
             ("list_schemas", "SHOW ALL TABLES"),
         )
 
-        def _canned_flight_info(self, command: str, sql: str):
-            df = run_script(self.spark, sql)
+        def _canned_flight_info(self, command: str, sql: str, df):
             schema = _spark_schema_to_arrow(df)
             ticket = flight.Ticket(sql.encode())
             endpoint = flight.FlightEndpoint(ticket, [self.location])
@@ -216,12 +238,20 @@ if flight is not None:
                 if mw is not None:
                     headers = mw.headers
             want_schema = headers.get("airport-list-flights-filter-schema")
+            # One listing answers both the SHOW ALL TABLES schema and the
+            # per-table flights. Temp views are session-global: they match
+            # every schema filter, as Spark lists them in every database.
+            listing = table_listing(self.spark)
             for command, sql in self.CANNED_FLIGHTS:
-                yield self._canned_flight_info(command, sql)
-            for db, name, _ in all_tables(self.spark).collect():
-                if want_schema and db != want_schema:
+                if sql == "SHOW ALL TABLES":
+                    df = listing.drop("temporary")
+                else:
+                    df = run_script(self.spark, sql)
+                yield self._canned_flight_info(command, sql, df)
+            for db, name, _, temporary in listing.collect():
+                if want_schema and not temporary and db != want_schema:
                     continue
-                full = name if db == "temp" else f"{db}.{name}"
+                full = name if temporary else f"{db}.{name}"
                 schema = _spark_schema_to_arrow(self.spark.table(full))
                 ticket = flight.Ticket(
                     json.dumps({"query": f"SELECT * FROM {full}"}).encode()
@@ -258,10 +288,6 @@ if flight is not None:
             writer.write_table(pa.table({"rows_inserted": [total]}, schema=ack_schema))
 
         # --- DDL actions -----------------------------------------------------
-        def _db_comment(self, db: str) -> str | None:
-            rows = self.spark.sql(f"DESCRIBE NAMESPACE {quote_ident(db)}").collect()
-            return next((r[1] for r in rows if r[0] == "Comment"), None)
-
         def do_action(self, context, action):
             body = action.body.to_pybytes() if action.body else b"{}"
             if action.type == "create_schema":
@@ -297,13 +323,13 @@ if flight is not None:
                 catalog_name = payload.get("catalog_name", "main")
                 schemas = [
                     {
-                        "schema": db,
-                        "description": self._db_comment(db) or "Spark Schema",
+                        "schema": d.name,
+                        "description": d.description or "Spark Schema",
                         "tags": {},
                         "type": "table",
                         "contents": {"url": None, "sha256": None, "serialized": None},
                     }
-                    for db in databases(self.spark)
+                    for d in self.spark.catalog.listDatabases()
                 ]
                 catalog_root = {
                     "contents": {"url": None, "sha256": None, "serialized": None},

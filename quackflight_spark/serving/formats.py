@@ -20,7 +20,8 @@ Serialization is a protocol concern: results at this point are final
 (post-LIMIT / post-agg) and collected whole, bounded by Spark's
 spark.driver.maxResultSize check. Flight's do_get collects with one
 toArrow() too, and streams through toLocalIterator only when the result's
-size estimate exceeds maxResultSize or is unknown (see flight_server.py).
+size estimate exceeds maxResultSize or is unknown, or when Spark aborts
+the collection at maxResultSize (see flight_server.py).
 """
 
 from __future__ import annotations

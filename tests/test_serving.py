@@ -363,6 +363,42 @@ def test_result_limit_follows_max_result_size(spark):
     assert not _within_result_limit(rdd, 0)
 
 
+def test_flight_do_get_streams_when_collection_exceeds_limit(spark):
+    """A parquet scan's estimate is its compressed file size, so a result
+    estimated within maxResultSize can exceed it as Arrow: Spark aborts
+    the one-job collection, and do_get falls back to the per-partition
+    stream and still returns every row."""
+    import threading
+
+    import pyarrow.flight as fl
+
+    from quackflight_spark.serving.flight_server import SparkFlightServer, _within_result_limit
+
+    key = "spark.driver.maxResultSize"
+    conf = spark.sparkContext._jsc.sc().conf()  # the live conf task sets read
+    old = conf.get(key, None)
+    sql = "SELECT * FROM lineitem UNION ALL SELECT * FROM lineitem"
+    conf.set(key, "800k")
+    server = SparkFlightServer(spark, "grpc://127.0.0.1:0")
+    threading.Thread(target=server.serve, daemon=True).start()
+    try:
+        df = spark.sql(sql)
+        assert _within_result_limit(df, 800 << 10)
+        with pytest.raises(Exception, match="maxResultSize"):
+            df.toArrow()
+        client = fl.connect(f"grpc://127.0.0.1:{server.port}")
+        schema, batches, table = _flight_batches(client, sql)
+        assert table.num_rows == 12000 and max(b.num_rows for b in batches) <= 1024
+        assert schema.equals(client.get_flight_info(
+            fl.FlightDescriptor.for_command(sql.encode())).schema)
+    finally:
+        server.shutdown()
+        if old is None:
+            conf.remove(key)
+        else:
+            conf.set(key, old)
+
+
 PARITY_STATEMENTS = [
     "SHOW ALL TABLES",
     "SUMMARIZE nation",
@@ -419,6 +455,56 @@ def test_flight_get_info_no_result_has_empty_schema(flight_client, spark, tmp_pa
         assert len(flight_client.get_flight_info(desc).schema) == 0
     finally:
         detach_namespace(spark, "gfi")
+
+
+def test_flight_get_info_then_do_get_runs_script_once(flight_client, spark):
+    """get_flight_info runs the script's earlier statements and hands out
+    a ticket for the last one, so a CTAS + SELECT ticket creates its table
+    once and do_get reads it."""
+    import pyarrow.flight as fl
+
+    sql = "CREATE TABLE _gfi_ctas AS SELECT n_nationkey FROM nation; SELECT count(*) AS c FROM _gfi_ctas"
+    try:
+        info = flight_client.get_flight_info(fl.FlightDescriptor.for_command(sql.encode()))
+        assert info.schema.names == ["c"]
+        table = flight_client.do_get(info.endpoints[0].ticket).read_all()
+        assert table.schema.equals(info.schema)
+        assert table.to_pylist() == [{"c": 25}]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS _gfi_ctas")
+
+
+def test_flight_list_flights_schema_filter(flight_client, spark):
+    """The airport-list-flights-filter-schema header keeps one database's
+    tables plus the session's temp views, which Spark lists in every
+    database; a real database named `temp` is listed by its qualified
+    names, not taken for temp views."""
+    import pyarrow.flight as fl
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS lf_db")
+    spark.sql("CREATE TABLE IF NOT EXISTS lf_db.m (a INT) USING parquet")
+    spark.sql("CREATE DATABASE IF NOT EXISTS temp")
+    spark.sql("CREATE TABLE IF NOT EXISTS temp.real_t (b STRING) USING parquet")
+
+    def flights(schema=None):
+        headers = [(b"airport-list-flights-filter-schema", schema.encode())] if schema else []
+        infos = flight_client.list_flights(options=fl.FlightCallOptions(headers=headers))
+        return {
+            i.descriptor.path[0].decode(): i
+            for i in infos
+            if i.descriptor.descriptor_type == fl.DescriptorType.PATH
+        }
+
+    try:
+        filtered = flights("lf_db")
+        assert {"lf_db.m", "nation", "lineitem"} <= set(filtered)
+        assert not {"temp.real_t", "default.real_t"} & set(filtered)
+        real = flights()["temp.real_t"]
+        assert real.schema.names == ["b"]
+        assert flight_client.do_get(real.endpoints[0].ticket).read_all().schema.names == ["b"]
+    finally:
+        spark.sql("DROP DATABASE lf_db CASCADE")
+        spark.sql("DROP DATABASE temp CASCADE")
 
 
 def test_all_tables_types_and_known_estimate(spark):
