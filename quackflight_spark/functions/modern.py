@@ -859,14 +859,12 @@ def fn_udf_slugify(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: pure string algebra on ASCII part names — identical
     regex semantics in pandas and DuckDB ('+' runs, 'g' global),
     deterministic trivially."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
     def slugify(s):  # noqa: ANN001 — PEP-563 stringized hints break
         # pandas_udf signature inspection under `from __future__ import
         # annotations`; the return type lives in the decorator
-        assert isinstance(s, pd.Series)
         return (
             s.str.lower()
             .str.replace(r"[^a-z0-9]+", "-", regex=True)

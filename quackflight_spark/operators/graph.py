@@ -15,15 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from quackflight_spark.pipeline.fixpoint import fixpoint, stage_parquet
 from quackflight_spark.registry import query
 from quackflight_spark.sources.fixtures import load_table
-
-# Evidence hook (r10, tools/scale_curve_graph.py): the iterative
-# operators record how many rounds they actually ran here, keyed by
-# loop name — turns "bounded by MAX_ROUNDS" docstring claims into
-# measured per-SF numbers in PERF.md. Write-only from the operators;
-# no behavior depends on it.
-ROUND_TRACE: dict[str, int] = {}
 
 BFS_MIN_CO = 2   # co-purchase support threshold for the BFS edge set
 BFS_MAX_HOPS = 4
@@ -269,8 +263,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     alive = incidence.select("node").distinct().localCheckpoint(eager=False)
-    n_alive = alive.count()
-    ROUND_TRACE["kcore_peel"] = 0
     # One materialization (lazy checkpoint + count) per round. An r11
     # A/B measured the VERDICT-r10 candidate "batch 2 rounds per
     # materialization" a wash on local[32] (2.64 vs 2.79 s, 65 vs 69
@@ -281,8 +273,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-round convergence check (stop ASAP) is the 100 TB-correct
     # shape. The floor amortizes with data volume: see the
     # sf1-equivalent crossover leg in tools/scale_curve_graph.py.
-    for _ in range(KCORE_MAX_ROUNDS):
-        ROUND_TRACE["kcore_peel"] += 1
+
+    def peel(state: tuple[DataFrame, int]) -> tuple[tuple[DataFrame, int], bool]:
+        alive, n_alive = state
         # ONE semi-join per round, not two (r12-opt): the node-side
         # filter is provably redundant inside the loop — a node removed
         # in round s had < K alive neighbors then, and alive only
@@ -309,21 +302,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         n_new = new_alive.count()
-        # this round's alive set is superseded once the count above
-        # has materialized new_alive (r13, guide §5 — see
-        # frame_cache.free_checkpoint); incidence stays live all loop
-        from quackflight_spark.pipeline.frame_cache import free_checkpoint
+        return (new_alive, n_new), n_new == n_alive
 
-        free_checkpoint(alive)
-        alive = new_alive
-        if n_new == n_alive:
-            break
-        n_alive = n_new
-    else:
-        raise RuntimeError(
-            f"graph_kcore: peel did not converge within {KCORE_MAX_ROUNDS} "
-            "rounds — raise KCORE_MAX_ROUNDS (oracle unrolls the same bound)"
-        )
+    # incidence stays live all loop; each round's alive set is released
+    # once its successor has counted
+    alive, _ = fixpoint("kcore_peel", KCORE_MAX_ROUNDS, peel, (alive, alive.count()))
     return (
         incidence.join(alive, "node", "left_semi")
         .join(alive.select(F.col("node").alias("nb")), "nb", "left_semi")
@@ -534,34 +517,7 @@ SCC_MAX_INNER = 40    # jumped propagation: bound ≫ observed (17 on the fixtur
 SCC_BROADCAST_NODE_LIMIT = 4_000_000
 
 
-def _scc_materialize(df: DataFrame, tag: str) -> DataFrame:
-    """Parquet round-trip: truncates lineage AND Catalyst statistics.
-    localCheckpoint is NOT enough for this loop: its LogicalRDD carries
-    the origin plan's stats forward, and a round plan that multiplies k
-    leaf sizes (SizeInBytesOnlyStatsPlanVisitor.visitJoin takes the
-    PRODUCT of children) compounds sizeInBytes as S^k per round — the
-    stat is a BigInt whose bit-length grows exponentially, and by round
-    ~12 the driver burns minutes inside BigInteger multiply (measured:
-    0.5 s → 108 s/round; jstack showed Thread-3 pinned in
-    multiplyToomCook3 under visitJoin). Reading back from parquet
-    resets stats to the real file size — the batch analogue of reliable
-    checkpointing, and what a cluster deployment would do anyway."""
-    import uuid
-
-    path = f"{_SCC_STAGE}/{tag}_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-from quackflight_spark.staging import stage_root  # noqa: E402
-
-_SCC_STAGE = stage_root("scc_iter")
-
-
-def _fb_labels(
-    edges: DataFrame, nodes: DataFrame, caller: str,
-    n_nodes: int | None = None,
-) -> DataFrame:
+def _fb_labels(edges: DataFrame, nodes: DataFrame, n_nodes: int) -> DataFrame:
     """(node, f, b): f = min node id REACHABLE FROM node along edge
     direction, b = min node id REACHING node (both including itself).
     The two propagations share ONE loop (same rounds, one checkpoint +
@@ -571,10 +527,15 @@ def _fb_labels(
     b: v ← min b(u) over u→v) then a pointer jump f ← min(f, f[f])
     via the PREVIOUS round's materialized map — valid because
     f(u)=m means u →* m, so anything m reaches, u reaches (directed
-    generalization of pipeline/dedup.py:min_label_components). The
-    per-round truncation is a parquet round-trip, NOT localCheckpoint
-    — see _scc_materialize for the Catalyst-stats compounding this
-    avoids. Loud non-convergence."""
+    generalization of pipeline/dedup.py:min_label_components).
+
+    Rounds are truncated by a parquet round-trip (`stage_parquet`), NOT
+    localCheckpoint, whose LogicalRDD carries the origin plan's stats
+    forward: visitJoin multiplies the k leaf sizes, so sizeInBytes
+    compounds as S^k per round and by round ~12 the driver spent
+    minutes in BigInteger multiply (0.5 → 108 s/round). Parquet resets
+    stats to the real file size, as reliable checkpointing would on a
+    cluster. `fixpoint` deletes each superseded round's directory."""
     labels = nodes.select(
         "node", F.col("node").alias("f"), F.col("node").alias("b")
     ).localCheckpoint(eager=False)
@@ -584,11 +545,8 @@ def _fb_labels(
     # so the edge set paid per-round shuffle writes into SortMergeJoins.
     # The label row count is constant across rounds; one entry count
     # decides the loop. Past the gate (billions of nodes) the keyed
-    # shape below is unchanged. The caller usually already counted the
-    # node set (the peel's convergence check) — passing it in skips a
-    # duplicate count job per outer round (r13).
-    if n_nodes is None:
-        n_nodes = labels.count()
+    # shape below is unchanged. The caller already counted the node set
+    # (the peel's convergence check), so no count job is spent here (r13).
     bcast = n_nodes <= SCC_BROADCAST_NODE_LIMIT
 
     def maybe_bcast(df: DataFrame) -> DataFrame:
@@ -611,10 +569,8 @@ def _fb_labels(
         F.col("dst").alias("tgt"), F.col("src").alias("key"),
         F.lit(False).alias("isf"),
     ))
-    changed = -1
-    ROUND_TRACE["scc_fb_inner"] = ROUND_TRACE.get("scc_fb_inner", 0)
-    for _ in range(SCC_MAX_INNER):
-        ROUND_TRACE["scc_fb_inner"] += 1
+
+    def propagate(labels: DataFrame) -> tuple[DataFrame, bool]:
         nm = (
             e2.join(maybe_bcast(labels), F.col("key") == labels.node)
             .groupBy("tgt")
@@ -665,16 +621,10 @@ def _fb_labels(
                 .cast("long")
             ).alias("changed"),
         ).select("node", "f", "b")
-        labels = _scc_materialize(slim, "lab")
-        changed = int(obs.get["changed"] or 0)
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"{caller}: min-reach propagation did not converge in "
-            f"{SCC_MAX_INNER} rounds — raise SCC_MAX_INNER"
-        )
-    return labels
+        staged = stage_parquet(slim)
+        return staged, int(obs.get["changed"] or 0) == 0
+
+    return fixpoint("scc_fb_inner", SCC_MAX_INNER, propagate, labels)
 
 
 @query("graph_scc", oracle=f"""
@@ -797,12 +747,12 @@ def _scc_peel(spark: SparkSession, edges: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    edges_rem = edges
-    assigned = None
-    ROUND_TRACE["scc_outer"] = 0
-    ROUND_TRACE["scc_fb_inner"] = 0
-    for _ in range(SCC_MAX_OUTER):
-        ROUND_TRACE["scc_outer"] += 1
+    # `assigned` stays a lazy chain over every round's remaining /
+    # edges_rem checkpoints until the result is consumed, so no round
+    # state is released here (the inner propagation releases its own).
+
+    def peel(state: tuple) -> tuple[tuple, bool]:
+        assigned, remaining, edges_rem = state
         # TRIM (the standard FW-BW accelerator): a remaining node with
         # no outgoing or no incoming edge lies on no cycle — it is a
         # singleton SCC, assigned immediately without any propagation.
@@ -849,7 +799,7 @@ def _scc_peel(spark: SparkSession, edges: DataFrame) -> DataFrame:
         remaining = core_nodes.localCheckpoint(eager=False)
         n_remaining = remaining.count()
         if n_remaining == 0:
-            break
+            return (assigned, remaining, edges_rem), True
         keep = remaining.withColumnRenamed("node", "k")
         edges_rem = (
             edges_rem.join(keep, edges_rem.src == keep.k)
@@ -860,8 +810,7 @@ def _scc_peel(spark: SparkSession, edges: DataFrame) -> DataFrame:
         )
         # fused f/b match on the trimmed core (n_remaining reuses the
         # convergence count above — no duplicate gate-count job)
-        fb = _fb_labels(edges_rem, remaining, "graph_scc.fb",
-                        n_nodes=n_remaining)
+        fb = _fb_labels(edges_rem, remaining, n_remaining)
         done = fb.filter(F.col("f") == F.col("b")).select(
             "node", F.col("f").alias("scc_id")
         )
@@ -872,7 +821,7 @@ def _scc_peel(spark: SparkSession, edges: DataFrame) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         if remaining.count() == 0:
-            break
+            return (assigned, remaining, edges_rem), True
         keep = remaining.withColumnRenamed("node", "k")
         edges_rem = (
             edges_rem.join(keep, edges_rem.src == keep.k)
@@ -881,10 +830,10 @@ def _scc_peel(spark: SparkSession, edges: DataFrame) -> DataFrame:
             .drop("k")
             .localCheckpoint(eager=False)
         )
-    else:
-        raise RuntimeError(
-            f"graph_scc: peel did not converge in {SCC_MAX_OUTER} rounds"
-        )
+        return (assigned, remaining, edges_rem), False
+
+    assigned, _, _ = fixpoint("scc_outer", SCC_MAX_OUTER, peel, (None, remaining, edges),
+                              release_superseded=False)
     sizes = assigned.groupBy("scc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("scc_size")
     )
@@ -1484,71 +1433,58 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the min_label_components device); the dropped-edge and decrement
     # tables ride the same broadcast size gate as the adjacency.
     surv = F.col("support") >= KTRUSS_K - 2
-    ROUND_TRACE["ktruss_peel"] = 0
-    n_prev = -1
-    # Superseded round state is freed explicitly (r13, guide §5): the
-    # ledger checkpoints are ~GB-scale past ×10, and dead rounds'
-    # blocks otherwise wait for a JVM GC before ContextCleaner can
-    # release them (measured 27 GB accumulated / 1.5× slower at ×10).
-    # `edges` is only read until the first count materializes tri/sup.
-    from quackflight_spark.pipeline.frame_cache import free_checkpoint
 
-    superseded = [edges]
-    for _ in range(KTRUSS_MAX_ROUNDS):
-        ROUND_TRACE["ktruss_peel"] += 1
+    def peel(state: tuple) -> tuple[tuple, bool]:
+        # The first round only counts the enumerated ledger; its state
+        # also carries `edges`, read until that count materializes
+        # tri/sup. Every later round peels once, then counts.
+        tri, sup, n_prev = state[:3]
+        if n_prev is not None:
+            dropped = sup.filter(~surv).select("src", "dst")
+            d1 = dropped.select(
+                F.col("src").alias("x"), F.col("dst").alias("y"), F.lit(1).alias("m1")
+            )
+            d2 = dropped.select(
+                F.col("src").alias("x"), F.col("dst").alias("z"), F.lit(1).alias("m2")
+            )
+            d3 = dropped.select(
+                F.col("src").alias("y"), F.col("dst").alias("z"), F.lit(1).alias("m3")
+            )
+            # A triangle dies when any of its three edges dropped; supports
+            # for the next round are the role counts over the SURVIVING
+            # ledger — identical to re-enumerating triangles of the
+            # surviving edge set, without rebuilding adjacency. (An A/B
+            # against explicit per-edge support decrements measured the
+            # decrement bookkeeping WORSE — an extra checkpointed join
+            # layer per round costs more than recounting 3·|tri| tiny rows;
+            # min-of-3 interleaved 15.0 s vs 24.4 s — so the recount is the
+            # kept shape. A r13 variant replacing these marker left-joins
+            # with three LEFT ANTI joins against one identically-projected
+            # dropped set ALSO measured worse — per-round unit min-of-4
+            # interleaved: marker+union 1.80 s, anti+union 2.06 s,
+            # anti+explode 2.37 s; full-key A/B old 18.2 s vs new 22.4 s at
+            # ≤0.4% steal — so the marker shape is the kept one, too.)
+            tri = (
+                tri.join(maybe_bcast(d1), ["x", "y"], "left")
+                .join(maybe_bcast(d2), ["x", "z"], "left")
+                .join(maybe_bcast(d3), ["y", "z"], "left")
+                .filter(
+                    F.col("m1").isNull()
+                    & F.col("m2").isNull()
+                    & F.col("m3").isNull()
+                )
+                .select("x", "y", "z")
+                .localCheckpoint(eager=False)
+            )
+            sup = role_sup(tri).localCheckpoint(eager=False)
         # One job: materializes this round's sup (and, chained through
         # its lineage, the surviving-triangle blocks) and returns the
         # survivor count.
         n_keep = sup.filter(surv).count()
-        for _df in superseded:
-            free_checkpoint(_df)
-        superseded = [tri, sup]
-        if n_keep == n_prev:
-            break
-        n_prev = n_keep
-        dropped = sup.filter(~surv).select("src", "dst")
-        d1 = dropped.select(
-            F.col("src").alias("x"), F.col("dst").alias("y"), F.lit(1).alias("m1")
-        )
-        d2 = dropped.select(
-            F.col("src").alias("x"), F.col("dst").alias("z"), F.lit(1).alias("m2")
-        )
-        d3 = dropped.select(
-            F.col("src").alias("y"), F.col("dst").alias("z"), F.lit(1).alias("m3")
-        )
-        # A triangle dies when any of its three edges dropped; supports
-        # for the next round are the role counts over the SURVIVING
-        # ledger — identical to re-enumerating triangles of the
-        # surviving edge set, without rebuilding adjacency. (An A/B
-        # against explicit per-edge support decrements measured the
-        # decrement bookkeeping WORSE — an extra checkpointed join
-        # layer per round costs more than recounting 3·|tri| tiny rows;
-        # min-of-3 interleaved 15.0 s vs 24.4 s — so the recount is the
-        # kept shape. A r13 variant replacing these marker left-joins
-        # with three LEFT ANTI joins against one identically-projected
-        # dropped set ALSO measured worse — per-round unit min-of-4
-        # interleaved: marker+union 1.80 s, anti+union 2.06 s,
-        # anti+explode 2.37 s; full-key A/B old 18.2 s vs new 22.4 s at
-        # ≤0.4% steal — so the marker shape is the kept one, too.)
-        tri = (
-            tri.join(maybe_bcast(d1), ["x", "y"], "left")
-            .join(maybe_bcast(d2), ["x", "z"], "left")
-            .join(maybe_bcast(d3), ["y", "z"], "left")
-            .filter(
-                F.col("m1").isNull()
-                & F.col("m2").isNull()
-                & F.col("m3").isNull()
-            )
-            .select("x", "y", "z")
-            .localCheckpoint(eager=False)
-        )
-        sup = role_sup(tri).localCheckpoint(eager=False)
-    else:
-        raise RuntimeError(
-            f"graph_ktruss: peel did not converge within "
-            f"{KTRUSS_MAX_ROUNDS} rounds — raise KTRUSS_MAX_ROUNDS "
-            "(oracle unrolls the same bound)"
-        )
+        return (tri, sup, n_keep), n_keep == n_prev
+
+    _, sup, _ = fixpoint("ktruss_peel", KTRUSS_MAX_ROUNDS, peel,
+                         (tri, sup, None, edges))
     return sup.filter(surv).select(
         F.least("src", "dst").alias("u"),
         F.greatest("src", "dst").alias("v"),

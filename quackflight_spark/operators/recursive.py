@@ -11,7 +11,7 @@ between iterations.
 `fixpoint_reachability` stays as the documented fallback for engines
 without WITH RECURSIVE (Spark <4.0): a driver-side fixpoint loop where
 each iteration is one distributed join round and the driver only checks
-a scalar is-empty flag — the classic transitive-closure pattern. Both
+a scalar count — the classic transitive-closure pattern. Both
 forms are tested equal (tests/test_operators.py).
 """
 
@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quackflight_spark.pipeline.fixpoint import fixpoint
 from quackflight_spark.registry import query
 from quackflight_spark.sources.fixtures import load_table, register_all
 
@@ -43,19 +44,24 @@ def fixpoint_reachability(seeds: DataFrame, edges: DataFrame) -> DataFrame:
     """UNION ALL-recursive expansion from seed rows (start, reach, depth)
     over edges (src, dst), to fixpoint — WITH RECURSIVE semantics for
     engines without native support. Requires an acyclic edge set (like
-    SQL UNION ALL recursion)."""
-    frontier = seeds.persist()
-    closure = frontier
-    for _ in range(MAX_ITERATIONS):
+    SQL UNION ALL recursion); a cycle hits MAX_ITERATIONS and raises."""
+
+    # one count of the checkpointed closure materializes it and the new
+    # frontier, and is the convergence test (UNION ALL grows iff the
+    # frontier is non-empty)
+    def expand(state: tuple) -> tuple[tuple, bool]:
+        closure, frontier, n = state
         nxt = (
             frontier.join(edges, frontier.reach == edges.src)
             .select("start", F.col("dst").alias("reach"), (F.col("depth") + 1).alias("depth"))
-            .persist()
+            .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
-            break
-        closure = closure.union(nxt)
-        frontier = nxt
+        closure = closure.union(nxt).localCheckpoint(eager=False)
+        n_new = closure.count()
+        return (closure, nxt, n_new), n_new == n
+
+    closure, _, _ = fixpoint("fixpoint_reachability", MAX_ITERATIONS, expand,
+                             (seeds, seeds, -1))
     return closure
 
 

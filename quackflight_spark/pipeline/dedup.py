@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quackflight_spark.pipeline.fixpoint import fixpoint
 from quackflight_spark.registry import query
 from quackflight_spark.sources.fixtures import load_table
 
@@ -893,17 +894,11 @@ def min_label_components(
     def maybe_bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
 
-    changed = -1
-    # Superseded round state freed explicitly (r13, guide §5): the
-    # previous round's label checkpoint is dead once this round's
-    # convergence count has materialized the new one — without the
-    # explicit free, dead label blocks (∝ nodes × rounds) wait for a
-    # JVM GC before ContextCleaner can release them. `edges` stays
-    # live for the whole loop (every round joins it).
-    from quackflight_spark.pipeline.frame_cache import free_checkpoint
-
-    prev_full = labels  # the entry checkpoint, dead after round 1
-    for _ in range(max_rounds):  # bound >> log₂(diameter)
+    # The state is the round's full checkpoint (node, lbl[, olbl]): it is
+    # what the helper releases once the next round has counted. `edges`
+    # stays live for the whole loop (every round joins it).
+    def halve(full: DataFrame) -> tuple[DataFrame, bool]:
+        labels = full.select("node", "lbl")
         neighbor_min = (
             edges.join(maybe_bcast(labels), edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
@@ -948,18 +943,9 @@ def min_label_components(
             .localCheckpoint(eager=False)
         )
         changed = new_full.filter(F.col("lbl") != F.col("olbl")).count()
-        free_checkpoint(prev_full)
-        prev_full = new_full
-        labels = new_full.select("node", "lbl")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"{caller}: min-label propagation did not converge in "
-            f"{max_rounds} rounds ({changed} labels still changing) — "
-            "component diameter exceeds the bound; raise the round bound"
-        )
-    return labels
+        return new_full, changed == 0
+
+    return fixpoint(caller, max_rounds, halve, labels).select("node", "lbl")
 
 
 @query("dedup_clusters", oracle=f"""

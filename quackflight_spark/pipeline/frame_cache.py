@@ -62,27 +62,3 @@ def clear_frames() -> None:
             pass
     _CACHE.clear()
 
-
-def free_checkpoint(df: DataFrame | None) -> None:
-    """Release a SUPERSEDED localCheckpoint's storage blocks (r13,
-    guide §5: unpersist when done). Iterative loops reassign their
-    round-state frames every round; the dead rounds' blocks stay in
-    the block store until a JVM GC lets ContextCleaner find them — at
-    a ×10 workload the ktruss loop accumulated 27 GB of dead ledger
-    blocks and the probe ran 1.5× slower from the storage pressure.
-    Calling this frees the blocks deterministically.
-
-    SAFETY: only call this once every consumer of `df` has
-    materialized its own checkpoint (local checkpoints cannot be
-    recomputed — a premature free raises CHECKPOINT_RDD_BLOCK_ID_NOT_
-    FOUND loudly on the next read, it can never corrupt results). The
-    loops below free round r-1's state strictly after round r's
-    convergence action returns."""
-    if df is None:
-        return
-    try:
-        lp = df._jdf.queryExecution().analyzed()
-        if lp.getClass().getSimpleName() == "LogicalRDD":
-            lp.rdd().unpersist(False)
-    except Exception:
-        pass

@@ -37,6 +37,25 @@ def test_registry_contract():
     assert set(q) - set(o) == set()
 
 
+def test_no_assert_statements_in_package():
+    """`python -O` strips `assert`, so a production invariant guarded by
+    one silently stops being checked: the package raises explicit
+    exceptions instead."""
+    import ast
+    import pathlib
+
+    import quackflight_spark
+
+    root = pathlib.Path(quackflight_spark.__file__).parent
+    found = [
+        f"{path.relative_to(root.parent)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not found, found
+
+
 def test_gate_priority_ordering():
     """The driver's correctness gate truncates at ~50 keys per round and
     walks queries() in dict order: the head must be exactly the
@@ -4368,11 +4387,15 @@ def test_ktruss_shuffled_fallback_matches_broadcast(spark, sf_dir, monkeypatch):
     assert shuffled == broadcast and broadcast
 
 
-def test_free_checkpoint_semantics(spark):
-    """r13: free_checkpoint releases a localCheckpoint's blocks, no-ops
-    on derived (non-LogicalRDD) frames, and a premature free fails
-    LOUDLY on the next read (never silently wrong)."""
-    from quackflight_spark.pipeline.frame_cache import free_checkpoint
+def test_free_checkpoint_semantics(spark, sf_dir):
+    """The fixpoint helper's release frees a localCheckpoint's blocks and
+    a staged parquet round's directory, no-ops on derived
+    (non-LogicalRDD) frames, and a premature free fails LOUDLY on the
+    next read (never silently wrong)."""
+    import os
+    from urllib.parse import urlparse
+
+    from quackflight_spark.pipeline.fixpoint import release, stage_parquet
 
     df = spark.range(100).localCheckpoint(eager=False)
     assert df.count() == 100
@@ -4382,15 +4405,22 @@ def test_free_checkpoint_semantics(spark):
 
     before = cached_ids()
     # derived frame: helper must no-op (blocks stay)
-    free_checkpoint(df.select("id"))
+    assert release(df.select("id")) == "noops"
     assert cached_ids() == before
     # the checkpoint itself: blocks released
-    free_checkpoint(df)
+    assert release(df) == "released"
     assert cached_ids() < before
     # reading a freed local checkpoint is a loud error, not wrong data
     with pytest.raises(Exception):
         df.count()
-    free_checkpoint(None)  # guard: accepts None
+    # a staged round: its directory goes; a file scan elsewhere stays
+    staged = stage_parquet(spark.range(10))
+    path = os.path.dirname(urlparse(staged.inputFiles()[0]).path)
+    assert os.path.isdir(path)
+    assert release(staged) == "released"
+    assert not os.path.exists(path)
+    assert release(spark.read.parquet(f"{sf_dir}/region.parquet")) == "noops"
+    assert os.path.exists(f"{sf_dir}/region.parquet")
 
 
 def test_scc_matches_python_tarjan(spark, sf_dir):

@@ -4,10 +4,11 @@ graph_closeness, graph_betweenness) the way kcore/wcc/dbscan got curves
 STRUCTURAL volumes each algorithm actually moves —
 
 - scc: nodes/edges of the synthesized order-part digraph, OUTER peel
-  rounds and total fused f/b inner rounds (from operators.graph
-  ROUND_TRACE), plus the parquet-truncation share (bytes written per
-  run under the scc_iter staging root — the measured price of dodging
-  the Catalyst sizeInBytes S^k compounding, graph.py:_scc_materialize).
+  rounds and total fused f/b inner rounds (from the fixpoint helper's
+  round record), plus the parquet-truncation residue (bytes left per
+  run under the fixpoint staging root: one labels directory per outer
+  round, the price of dodging the Catalyst sizeInBytes S^k
+  compounding, graph.py:_fb_labels).
 - closeness: seeds, edges, and the (seed,node,hop) state volume — the
   quantity the level-synchronous join shuffles per hop; hops are FIXED
   (CLOSE_MAX_HOPS), so the curve should scale with state volume, not
@@ -48,6 +49,7 @@ def main() -> None:
     import __spark_entry__ as e
 
     import quackflight_spark.operators.graph as g
+    from quackflight_spark.pipeline import fixpoint
     from quackflight_spark.pipeline.frame_cache import clear_frames
     from quackflight_spark.session import get_spark
     from quackflight_spark.sources.fixtures import load_table
@@ -82,20 +84,21 @@ def main() -> None:
         ):
             clear_frames()
             spark.catalog.clearCache()
-            before_bytes = _du(g._SCC_STAGE) if extras == "scc" else 0
+            before_bytes = _du(fixpoint.STAGE) if extras == "scc" else 0
             t0 = time.perf_counter()
-            out = queries[key](spark, sf_dir)
-            n_out = out.count()
+            with fixpoint.recording() as loops:
+                out = queries[key](spark, sf_dir)
+                n_out = out.count()
             wall = round(time.perf_counter() - t0, 2)
             rec[f"{extras}_sec"] = wall
             rec[f"{extras}_rows_out"] = n_out
             if extras == "ktruss":
-                rec["ktruss_rounds"] = g.ROUND_TRACE.get("ktruss_peel")
+                rec["ktruss_rounds"] = loops["ktruss_peel"]["rounds"]
             if extras == "scc":
-                rec["scc_outer_rounds"] = g.ROUND_TRACE.get("scc_outer")
-                rec["scc_fb_inner_rounds"] = g.ROUND_TRACE.get("scc_fb_inner")
-                rec["scc_ckpt_mb_written"] = round(
-                    (_du(g._SCC_STAGE) - before_bytes) / 1e6, 1
+                rec["scc_outer_rounds"] = loops["scc_outer"]["rounds"]
+                rec["scc_fb_inner_rounds"] = loops["scc_fb_inner"]["rounds"]
+                rec["scc_stage_mb_kept"] = round(
+                    (_du(fixpoint.STAGE) - before_bytes) / 1e6, 1
                 )
         # state volumes for the fixed-hop walks (recomputed structurally,
         # outside the timed runs)
